@@ -18,6 +18,25 @@ Layer fields: 1 name, 2 features, 3 keys, 4 values, 5 extent,
 15 version. Feature fields: 1 id, 2 tags(packed), 3 type,
 4 geometry(packed). Value fields: 1 string, 2 float, 3 double,
 4 int, 5 uint, 6 sint, 7 bool.
+
+Malformed input — which decoders raise and which demote:
+* The general decoder (``decode_tile``, ``decode_layer``,
+  ``decode_value``, ``feature_props``) RAISES. ``ValueError``: a
+  truncated or over-10-byte varint, a group (3/4) or unknown wire
+  type, a Value with no known member. ``UnicodeDecodeError`` (a
+  ``ValueError``): a layer name, key or string value that is not
+  UTF-8. ``IndexError``: a feature tag past the layer's key or value
+  dictionary. Unknown fields are skipped, and a length-delimited
+  field running past its buffer is cut at the buffer's end.
+* The singles fast path DEMOTES, per tile. ``scan_singles_tile``
+  returns None for a tile outside the canonical singles layout;
+  ``decode_singles_batch`` lists in ``bad`` every tile with a layer
+  that fails a structural or length check, has a name, key or string
+  value that is not UTF-8, or indexes past its value dictionary. The
+  caller decodes those tiles with the general decoder, so a demoted
+  tile gets exactly the general decoder's rows or error, and the
+  batch's other tiles keep the fast path. Only a batch whose packed
+  string values would pass 2 GiB is demoted whole.
 """
 
 from __future__ import annotations
@@ -1100,6 +1119,36 @@ def scan_singles_tile(buf: bytes):
     return out if out else None
 
 
+def _invalid_utf8(buf: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Mask of the byte spans ``buf[s:s + n]`` that are not valid UTF-8:
+    one Arrow validation pass over all spans, and a per-span check only
+    when that pass finds a bad one."""
+    import pyarrow as pa
+
+    off = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    gather = (
+        np.arange(int(off[-1]), dtype=np.int64)
+        - np.repeat(off[:-1], lens)
+        + np.repeat(starts, lens)
+    )
+    packed = buf[gather].tobytes()
+    bad = np.zeros(len(lens), dtype=bool)
+    try:
+        pa.LargeStringArray.from_buffers(
+            len(lens), pa.py_buffer(off.tobytes()), pa.py_buffer(packed)
+        ).validate(full=True)
+        return bad
+    except pa.ArrowInvalid:
+        pass
+    for j in range(len(lens)):
+        try:
+            packed[off[j]:off[j + 1]].decode("utf-8")
+        except UnicodeDecodeError:
+            bad[j] = True
+    return bad
+
+
 def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
     """Whole-BATCH decode of canonical single-point one-prop layers —
     the inverse of ``build_singles_layers_batch``: the feature sections
@@ -1114,6 +1163,8 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
     encoding assumption), plus per-layer varint-count/byte-boundary
     alignment — so a false positive would need a byte stream that is
     simultaneously a valid foreign layer and a bit-exact canonical one.
+    Layer names, keys and string values must also be valid UTF-8, so
+    every caption returned is a valid Arrow string.
 
     Fallback is TILE-granular, not batch-granular: a mixed corpus
     (point features sharing batches — or layers — with polygons, v1
@@ -1146,13 +1197,20 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
         for i in range(nL)
     )
     arr = np.frombuffer(feat_buf, dtype=np.uint8)
-    ends = np.nonzero((arr & 0x80) == 0)[0]
+    sec_len = np.array([d[3] - d[2] for d in descs], dtype=np.int64)
+    bnd = np.cumsum(sec_len)
+    # every section's last byte ends a varint, so a varint cut short by
+    # a corrupt tile cannot run into the next layer and demote that
+    # layer's intact tile with it; the cut-short layer itself fails
+    # the open_end check below
+    term = (arr & 0x80) == 0
+    open_end = ~term[bnd - 1]
+    term[bnd - 1] = True
+    ends = np.nonzero(term)[0]
     starts = np.empty_like(ends)
     if len(ends):
         starts[0] = 0
         starts[1:] = ends[:-1] + 1
-    sec_len = np.array([d[3] - d[2] for d in descs], dtype=np.int64)
-    bnd = np.cumsum(sec_len)
     nv_cum = np.searchsorted(ends, bnd, side="left")
     nv_lay = np.diff(np.concatenate(([0], nv_cum)))
     ok_a = nv_lay == 15 * nfeat0
@@ -1163,8 +1221,17 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
     sv0 = np.concatenate(([0], nv_cum))[:-1]
     first_start[has] = starts[sv0[has]]
     prev_bnd = np.concatenate(([0], bnd[:-1]))
-    ok_a &= (last_end == bnd - 1) & (first_start == prev_bnd)
+    ok_a &= (last_end == bnd - 1) & (first_start == prev_bnd) & ~open_end
     bad_tile[tile_idx[~ok_a]] = True
+    # a name or key that is not UTF-8 demotes its tile: the general
+    # decoder raises on it, the fast path must not raise for the batch
+    names = [None] * nL
+    for i, d in enumerate(descs):
+        try:
+            d[1].decode("utf-8")
+            names[i] = d[0].decode("utf-8")
+        except UnicodeDecodeError:
+            bad_tile[tile_idx[i]] = True
 
     def _alive():
         return np.flatnonzero(~bad_tile[tile_idx] & ok_a)
@@ -1294,6 +1361,12 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
         )
         if np.any(vdie):
             bad_tile[tile_idx[keep_c[v_lay[vdie]]]] = True
+        # string values that are not UTF-8 demote their tile too (the
+        # general decoder raises on them), so the packed caption
+        # buffer below only ever holds valid Arrow strings
+        vok = np.flatnonzero(~vdie)
+        bad_str = _invalid_utf8(varr, (v_ps + shdr)[vok], slen[vok])
+        bad_tile[tile_idx[keep_c[v_lay[vok[bad_str]]]]] = True
     else:
         shdr = slen = np.empty(0, np.int64)
 
@@ -1377,9 +1450,7 @@ def decode_singles_batch(descs, blobs, tile_idx, n_tiles=None):
         np.where(is_cap, cap_gid, -1), type=pa.int64(), mask=~is_cap
     )
     captions = str_arr.take(cap_idx)
-    lay_names = np.array(
-        [descs[i][0].decode("utf-8") for i in surv], dtype=object
-    )
+    lay_names = np.array([names[i] for i in surv], dtype=object)
     res = {
         "lay_idx": surv,
         "lay_of_feat": lay_of_feat,

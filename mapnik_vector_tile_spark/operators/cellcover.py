@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.functions import pip as pipmod
 from mapnik_vector_tile_spark.functions import tilemath as tm
+from mapnik_vector_tile_spark.operators.grouped import trim_zip_import_caches
 
 COVER_SCHEMA = "feature_id long, z int, cx long, cy long"
 
@@ -410,6 +411,7 @@ def _cover_stage(features: DataFrame, z: int, kernel) -> DataFrame:
     from mapnik_vector_tile_spark.functions import geomcodec as gc
 
     def gen(batches):
+        trim_zip_import_caches()
         for pdf in batches:
             out_fid, out_cx, out_cy = [], [], []
             for fid, gt, xs, ys, offs in zip(
@@ -578,6 +580,7 @@ def cover_polygon_cells_classified(
     from mapnik_vector_tile_spark.functions import geomcodec as gc
 
     def gen(batches):
+        trim_zip_import_caches()
         for pdf in batches:
             out_fid, out_cx, out_cy, out_b = [], [], [], []
             for fid, gt, xs, ys, offs in zip(

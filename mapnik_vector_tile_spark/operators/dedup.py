@@ -1002,8 +1002,12 @@ def substring_dup_spans(
     operator of Lee et al. 2022 (arXiv:2107.06499, "Deduplicating
     Training Data Makes Language Models Better"), re-expressed
     Spark-first instead of via a monolithic suffix array: every MAXIMAL
-    token run of length >= min_len whose text appears (as a contiguous
-    token sequence) at least min_occ times across the corpus.
+    contiguous region covered by duplicated runs >= min_len, where a
+    duplicated run is a token run whose text appears (as a contiguous
+    token sequence) at least min_occ times across the corpus. Adjacent
+    or overlapping duplicated runs coalesce into one region, so a
+    region's full text may itself occur only once: the contract is
+    the covered token POSITIONS, which is what strip_dup_spans cuts.
 
     Equivalence to the suffix-array formulation: a duplicated run of
     length M >= L contains exactly M-L+1 duplicated L-grams at
@@ -1028,8 +1032,8 @@ def substring_dup_spans(
     here because the oracle gates exactness).
 
     Output: (doc_id, span_start, span_end, span_len) per maximal
-    duplicated span, token-indexed [start, end), span_len >= min_len
-    by construction."""
+    contiguous region covered by duplicated runs >= min_len,
+    token-indexed [start, end), span_len >= min_len by construction."""
     L = int(min_len)
     grams = docs.select(
         "doc_id",

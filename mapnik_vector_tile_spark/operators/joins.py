@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark.functions import pip as pipmod
 from mapnik_vector_tile_spark.functions import tilemath as tm
+from mapnik_vector_tile_spark.operators.grouped import trim_zip_import_caches
 
 TWO_W = 2.0 * tm.W
 
@@ -139,6 +140,7 @@ def _refine(cands: DataFrame, regions: DataFrame, broadcast_geo: bool) -> DataFr
     )
 
     def refine_batches(batches):
+        trim_zip_import_caches()
         for pdf in batches:
             if not len(pdf):
                 continue

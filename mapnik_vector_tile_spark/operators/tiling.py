@@ -34,7 +34,11 @@ from mapnik_vector_tile_spark.functions import pbf
 from mapnik_vector_tile_spark.functions import pip as pipmod
 from mapnik_vector_tile_spark.functions import simplify as simp
 from mapnik_vector_tile_spark.functions import tilemath as tm
-from mapnik_vector_tile_spark.operators.grouped import apply_grouped, group_starts
+from mapnik_vector_tile_spark.operators.grouped import (
+    apply_grouped,
+    group_starts,
+    trim_zip_import_caches,
+)
 from mapnik_vector_tile_spark.sources.synth import footprint_from_phash
 
 TWO_W_ARR = 2.0 * tm.W
@@ -267,6 +271,7 @@ def assign_tiles(
     )
 
     def gen(it):
+        trim_zip_import_caches()
         for pdf in it:
             n = len(pdf)
             if n == 0:
@@ -1243,6 +1248,7 @@ def decode_tiles_to_features(
         return rows
 
     def gen(it):
+        trim_zip_import_caches()
         import pyarrow as pa
 
         pa_schema = pa.schema([

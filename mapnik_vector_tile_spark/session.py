@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults match the sandbox (32 cores, single JVM); on a real
-cluster the same builder runs under spark-submit --py-files with
+Local mode runs one JVM on ``local[$SPARK_GRAFT_CPUS]`` (``local[*]``
+when unset) with shuffle partitions at twice the cores, at least 8; on
+a real cluster the same builder runs under spark-submit --py-files with
 executor-level parallelism — nothing here is local-only except the
 master default, which spark-submit overrides.
 """

@@ -177,7 +177,7 @@ def run_stateful_stream_to_memory(
     at-least-once replays cannot inflate version tickets; pass None to
     count raw deliveries.  ``state_partitions`` pins the query's
     state-store count (streaming/util.py); None inherits the session."""
-    from mapnik_vector_tile_spark.streaming.util import shuffle_partitions
+    from mapnik_vector_tile_spark.streaming.util import start_query
 
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -197,9 +197,8 @@ def run_stateful_stream_to_memory(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with shuffle_partitions(spark, state_partitions):
-        q = writer.start()
-        q.awaitTermination()
+    q = start_query(spark, writer, state_partitions)
+    q.awaitTermination()
 
 
 def run_stream_to_memory(
@@ -216,7 +215,7 @@ def run_stream_to_memory(
     Kafka and the sink for foreachBatch(EP1 encode) in production.
     ``state_partitions`` pins the query's state-store count
     (streaming/util.py); None inherits the session."""
-    from mapnik_vector_tile_spark.streaming.util import shuffle_partitions
+    from mapnik_vector_tile_spark.streaming.util import start_query
 
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -232,9 +231,8 @@ def run_stream_to_memory(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with shuffle_partitions(spark, state_partitions):
-        q = writer.start()
-        q.awaitTermination()
+    q = start_query(spark, writer, state_partitions)
+    q.awaitTermination()
 
 
 def run_incremental_retile(

@@ -95,9 +95,9 @@ def run_attribution_stream(
     completeness for bounded state.
 
     ``state_partitions`` pins spark.sql.shuffle.partitions for this
-    query's lifetime (state-store count per micro-batch — see
-    streaming/util.py); None inherits the session setting."""
-    from mapnik_vector_tile_spark.streaming.util import shuffle_partitions
+    query's start, which fixes its state-store count per micro-batch
+    (streaming/util.py); None inherits the session setting."""
+    from mapnik_vector_tile_spark.streaming.util import start_query
 
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -119,6 +119,5 @@ def run_attribution_stream(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with shuffle_partitions(spark, state_partitions):
-        q = writer.start()
-        q.awaitTermination()
+    q = start_query(spark, writer, state_partitions)
+    q.awaitTermination()

@@ -47,7 +47,7 @@ def run_scd2_stream(
     ``state_partitions`` pins the per-batch fold's shuffle width
     (streaming/util.py); None inherits the session."""
     from mapnik_vector_tile_spark.operators.temporal import scd2_apply
-    from mapnik_vector_tile_spark.streaming.util import shuffle_partitions
+    from mapnik_vector_tile_spark.streaming.util import start_query
 
     dim_dir = os.path.join(store_dir, "dim")
     current.write.mode("overwrite").parquet(dim_dir)
@@ -70,7 +70,6 @@ def run_scd2_stream(
     )
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with shuffle_partitions(spark, state_partitions):
-        q = writer.start()
-        q.awaitTermination()
+    q = start_query(spark, writer, state_partitions)
+    q.awaitTermination()
     return q

@@ -11,26 +11,26 @@ it on resume)."""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _KEY = "spark.sql.shuffle.partitions"
 
 
-@contextmanager
-def shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin spark.sql.shuffle.partitions around a streaming
-    query start/awaitTermination; always restores the previous value
-    (the session-global knob must not leak past the query — the state
-    partitioning is captured at query START, so the scope only needs
-    to cover start())."""
+def start_query(
+    spark: SparkSession, writer: DataStreamWriter, n: int | None
+) -> StreamingQuery:
+    """``writer.start()`` with spark.sql.shuffle.partitions pinned to
+    ``n`` for the start() call only. The query clones the session at
+    start, so its state partitioning is fixed by then; the previous
+    value is back before this returns, so the caller's
+    awaitTermination() and any concurrent query on the session see the
+    session's own value. ``n=None`` starts the query unpinned."""
     if n is None:
-        yield
-        return
+        return writer.start()
     prev = spark.conf.get(_KEY)
     spark.conf.set(_KEY, str(int(n)))
     try:
-        yield
+        return writer.start()
     finally:
         spark.conf.set(_KEY, prev)

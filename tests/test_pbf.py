@@ -230,3 +230,83 @@ def test_splice_merge_fast_rejects_overlong_varints():
     # and the scalar path preserves the overlong geometry bytes
     merged = pbf.splice_merge_layers([blob], "l")
     assert bad_geom in merged
+
+
+def _general_rows(tile: bytes) -> list[tuple]:
+    rows = []
+    for lmsg in pbf.decode_tile(tile):
+        layer = pbf.decode_layer(lmsg)
+        for f in layer["features"]:
+            xs, ys, _ = gc.decode_geometry(
+                int(f["type"]), f["geometry"].astype(np.int64),
+                version=int(layer["version"]),
+            )
+            rows.append((
+                layer["name"], int(f["id"]), int(f["type"]),
+                int(xs[0]), int(ys[0]),
+                pbf.feature_props(layer, f).get("caption"),
+            ))
+    return rows
+
+
+def test_decode_singles_corrupt_utf8_demotes_its_tile():
+    """Single-byte corruptions of canonical singles tiles, each decoded
+    in one batch with intact tiles: the batch never raises, intact
+    tiles keep the fast path, a tile whose layer name, key or string
+    value is not UTF-8 is demoted (the general decoder raises on it),
+    captions are valid Arrow strings, and every tile the fast path
+    keeps decodes exactly as the general decoder does."""
+    tiles = []
+    for t in range(3):
+        lb = pbf.LayerBuilder(f"pts-é{t}", version=2)
+        for j in range(3):
+            lb.add_feature(
+                10 * t + j, 1, np.array([9, 2 * j, 4 + t], np.int64),
+                {"caption": f"c{j}-ü{t}"},
+            )
+        tiles.append(pbf.layer_to_tile(lb.build()))
+    assert all(pbf.scan_singles_tile(b) is not None for b in tiles)
+
+    utf8_demoted = set()
+    for t, tile in enumerate(tiles):
+        for p in range(len(tile)):
+            for byte in (0xFF, 0xC3, 0x80):
+                if tile[p] == byte:
+                    continue
+                bad_tile = tile[:p] + bytes([byte]) + tile[p + 1:]
+                blobs = tiles[:t] + [bad_tile] + tiles[t + 1:]
+                descs, tix = [], []
+                for i, b in enumerate(blobs):
+                    for lay in pbf.scan_singles_tile(b) or ():
+                        descs.append(lay)
+                        tix.append(i)
+                res, bad = pbf.decode_singles_batch(
+                    descs, blobs, tix, n_tiles=len(blobs)
+                )
+                assert bad in ([], [t]), (p, byte, bad)
+                fast = {i: [] for i in range(len(blobs))}
+                if res is not None:
+                    res["caption"].validate(full=True)
+                    for f in range(len(res["fid"])):
+                        lay = int(res["lay_of_feat"][f])
+                        fast[tix[int(res["lay_idx"][lay])]].append((
+                            res["layer_name"][lay], int(res["fid"][f]),
+                            int(res["gt"][f]), int(res["px"][f]),
+                            int(res["py"][f]), res["caption"][f].as_py(),
+                        ))
+                for i in range(len(blobs)):
+                    if i != t:
+                        assert fast[i] == _general_rows(blobs[i])
+                if t not in tix or bad:
+                    try:
+                        _general_rows(bad_tile)
+                    except UnicodeDecodeError:
+                        if t in tix:
+                            utf8_demoted.add(p)
+                    except (ValueError, IndexError, TypeError):
+                        pass
+                else:
+                    assert fast[t] == _general_rows(bad_tile), (p, byte)
+    # the layer name's and a caption's bytes were both hit
+    assert tile.index(b"pts-") in utf8_demoted
+    assert tile.index(b"c2-") in utf8_demoted

@@ -73,6 +73,39 @@ def test_stream_matches_batch_oracle(spark, chunked_events, tmp_path):
     assert g["n_events"].sum() == ev.count()
 
 
+def test_state_partitions_pin_only_the_query_start(
+    spark, chunked_events, tmp_path, monkeypatch
+):
+    """state_partitions sizes the query's state, and the session's own
+    spark.sql.shuffle.partitions is back before awaitTermination()
+    runs, so nothing else on the session sees the pinned value."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    assert prev != "3"
+    seen = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def probe(self, timeout=None):
+        seen.append((self, spark.conf.get(key)))
+        return await_termination(self, timeout)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", probe)
+    S.run_stream_to_memory(
+        spark,
+        chunked_events[0],
+        table_name="dirty_pin",
+        z=6,
+        checkpoint_dir=str(tmp_path / "ckpt_pin"),
+        state_partitions=3,
+    )
+    assert [v for _, v in seen] == [prev]
+    assert spark.conf.get(key) == prev
+    (q, _), = seen
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+
+
 def test_stateful_dirty_versions_batching_invariant(spark, tmp_path):
     """applyInPandasWithState custom operator: the emitted (tile,
     version) ticket set must equal {(t, v): v <= total//D} computed
